@@ -125,10 +125,20 @@ def with_log2_fixed(df: DataFrame, src: str, out: str, prefix: str | None = None
     list). r15: the chained form cost ~40 py4j + analysis round-trips PER
     CHAIN, 1.5 s of pure driver-side plan construction on the 4-chain
     q177 (guide §5 "very large query plans are driver-side work");
-    measured 1.33 s → 0.42 s for one cold chain build."""
+    measured 1.33 s → 0.42 s for one cold chain build.
+
+    Raises ``ValueError`` when an input column already starts with the
+    intermediate prefix ``__{prefix or out}_``: it would shadow a lateral
+    alias and then be dropped with the intermediates."""
+    p = f"__{prefix or out}_"
+    clash = [c for c in df.columns if c.lower().startswith(p.lower())]
+    if clash:
+        raise ValueError(
+            f"input columns {clash} start with the intermediate prefix {p!r}; "
+            "rename them or pass another prefix"
+        )
     items = log2_fixed_items(src, out, prefix=prefix)
     cur = df.selectExpr("*", *items)
-    p = f"__{prefix or out}_"
     keep = [c for c in cur.columns if not c.startswith(p)]
     return cur.select(*keep)
 

@@ -30,7 +30,6 @@ from collections.abc import Callable, Iterator
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from reactive_kinesis_spark.config import ProducerConfig
 from reactive_kinesis_spark.streaming.deaggregate import pack_records
@@ -315,15 +314,18 @@ def idempotent_foreach_batch(
     out_dir: str,
     partition_by: tuple[str, ...] = (),
 ):
-    """Exactly-once parquet sink for ``foreachBatch`` via batch-id keyed
-    dynamic-partition overwrite.
+    """Exactly-once parquet sink for ``foreachBatch`` via a batch-id keyed
+    directory overwrite.
 
     Structured Streaming guarantees at-least-once ``foreachBatch``
     invocation: after a crash between sink write and commit-log write, the
-    SAME batchId is re-run. Writing each batch under ``_batch_id=<id>`` with
-    dynamic partitionOverwriteMode makes the replay overwrite its own
-    previous (possibly partial) output instead of appending duplicates —
-    at-least-once invocation + idempotent write = exactly-once output.
+    SAME batchId is re-run. Each batch is written straight to
+    ``<out_dir>/_batch_id=<id>`` with a plain overwrite (sub-partitioned by
+    ``partition_by`` when given), so the replay replaces its own previous
+    (possibly partial) output, all of it, instead of appending duplicates
+    — at-least-once invocation + idempotent write = exactly-once output.
+    Other batches' directories are never touched, and ``out_dir`` still
+    reads as one table partitioned by ``_batch_id``.
 
     This is the engine's answer to the reference's documented caveat
     (README.md:684-686: KPL retries mean consumers must dedup); for
@@ -335,17 +337,9 @@ def idempotent_foreach_batch(
     """
 
     def write(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            (
-                batch_df.withColumn("_batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .partitionBy("_batch_id", *partition_by)
-                .parquet(out_dir)
-            )
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+        writer = batch_df.write.mode("overwrite")
+        if partition_by:
+            writer = writer.partitionBy(*partition_by)
+        writer.parquet(os.path.join(out_dir, f"_batch_id={batch_id}"))
 
     return write

@@ -19,7 +19,7 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 
@@ -67,9 +67,13 @@ def tolerant_foreach_batch(
     never reach the DLQ; deterministic failures cost one cheap extra
     evaluation of the (tiny) failed subset.
 
-    Each evaluation round is pinned with ``persist`` + a materializing
-    count, so a non-deterministic predicate cannot give inconsistent
-    answers between the good/bad splits of one round.
+    Each evaluation round runs ONE Spark job: the flagged rows are
+    observed (row and failure counts) and persisted, and a ``noop`` write
+    materializes the cache while the observation counts it. The predicate
+    is therefore evaluated exactly once per round, so a non-deterministic
+    predicate cannot give inconsistent answers between the good/bad
+    splits of one round. A zero-failure batch costs one job before
+    ``process`` runs; each retry round adds one.
     """
 
     def run(batch_df: DataFrame, batch_id: int) -> None:
@@ -77,12 +81,19 @@ def tolerant_foreach_batch(
 
         def flag(df: DataFrame) -> tuple[DataFrame, int, int]:
             """Evaluate the predicate once, pinned: (flagged, total, failed)."""
-            flagged = df.withColumn("__ok", F.coalesce(ok, F.lit(False))).persist()
+            obs = Observation()
+            flagged = (
+                df.withColumn("__ok", F.coalesce(ok, F.lit(False)))
+                .observe(
+                    obs,
+                    F.count(F.lit(1)).alias("total"),
+                    F.sum(F.when(F.col("__ok"), 0).otherwise(1)).alias("failed"),
+                )
+                .persist()
+            )
             pinned.append(flagged)
-            counts = flagged.agg(
-                F.count(F.lit(1)).alias("total"),
-                F.sum(F.when(F.col("__ok"), 0).otherwise(1)).alias("failed"),
-            ).collect()[0]
+            flagged.write.format("noop").mode("overwrite").save()
+            counts = obs.get
             return flagged, counts["total"] or 0, counts["failed"] or 0
 
         try:

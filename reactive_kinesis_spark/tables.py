@@ -227,7 +227,10 @@ def _scan_layout(path: str) -> tuple[int, int]:
     file(s) at ``path`` — the upper bound on native scan parallelism for
     that table, and the size the injected repartition is derived from.
     Recurses into subdirectories so a Hive-partitioned layout is counted,
-    not mistaken for an empty (deficient) one."""
+    not mistaken for an empty (deficient) one. Hidden (``.``) and
+    underscore (``_``) directories are pruned unless they are
+    ``name=value`` partitions — Spark's own hidden-path rule, so staging
+    dirs like ``_temporary`` are skipped while ``_batch_id=3`` counts."""
     st = os.stat(path)
     key = (os.path.abspath(path), st.st_mtime_ns, st.st_size)
     got = _LAYOUT_CACHE.get(key)
@@ -236,12 +239,17 @@ def _scan_layout(path: str) -> tuple[int, int]:
     import pyarrow.parquet as pq
 
     if os.path.isdir(path):
-        files = [
-            os.path.join(root, f)
-            for root, dirs, names in os.walk(path)
-            for f in names
-            if f.endswith(".parquet") and not f.startswith((".", "_"))
-        ]
+        files = []
+        for root, dirs, names in os.walk(path):
+            dirs[:] = [
+                d for d in dirs
+                if not d.startswith(".") and (not d.startswith("_") or "=" in d)
+            ]
+            files += [
+                os.path.join(root, f)
+                for f in names
+                if f.endswith(".parquet") and not f.startswith((".", "_"))
+            ]
     else:
         files = [path]
     total_rgs = 0

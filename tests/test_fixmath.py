@@ -8,6 +8,8 @@ from __future__ import annotations
 
 import math
 
+import pytest
+
 from reactive_kinesis_spark.fixmath import (
     LOG2_SCALE,
     log2_fixed_ctes,
@@ -70,3 +72,18 @@ def test_log2_fixed_intermediates_dropped_and_src_expression(spark):
     lg = out.collect()[0]["lg"]
     assert abs(lg / LOG2_SCALE - math.log2(7)) <= 1.5 / LOG2_SCALE
     assert lg <= int(math.log2(7) * LOG2_SCALE) + 1
+
+
+def test_log2_fixed_rejects_input_column_with_intermediate_prefix(spark):
+    df = spark.createDataFrame([(3, 5)], "c long, __p_x0 long")
+    with pytest.raises(ValueError, match="__p_"):
+        with_log2_fixed(df, "c", "lg", prefix="p")
+    # the default prefix derives from ``out``
+    df = spark.createDataFrame([(3, 5)], "c long, __LG_e long")
+    with pytest.raises(ValueError, match="__lg_"):
+        with_log2_fixed(df, "c", "lg")
+    # a column that merely resembles the prefix is kept
+    df = spark.createDataFrame([(4, 5)], "c long, __pp_x0 long")
+    out = with_log2_fixed(df, "c", "lg", prefix="p")
+    assert out.columns == ["c", "__pp_x0", "lg"]
+    assert out.collect()[0]["lg"] == 2 * LOG2_SCALE

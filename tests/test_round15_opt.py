@@ -86,6 +86,22 @@ def test_partition_count_env_override(spark, sf_dir):
     assert _injected_parts(plan, "l_partkey") == expected
 
 
+def test_scan_layout_prunes_hidden_dirs_but_keeps_partitions(tmp_path):
+    """Spark's hidden-path rule: ``.x`` and ``_x`` directories are skipped,
+    ``name=value`` partition directories (even ``_batch_id=3``) count."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    table = pa.table({"v": list(range(10))})
+    for sub in ("k=1", "_batch_id=3", "_temporary/0", ".staging", "_batch_id=3/.tmp"):
+        (tmp_path / sub).mkdir(parents=True, exist_ok=True)
+        pq.write_table(table, str(tmp_path / sub / "part-0.parquet"))
+    rgs, total = tables._scan_layout(str(tmp_path))
+    one = pq.ParquetFile(str(tmp_path / "k=1" / "part-0.parquet")).metadata
+    assert rgs == 2 * one.num_row_groups
+    assert total == 2 * one.row_group(0).total_byte_size
+
+
 def test_clear_table_memo_hook_drops_layout_and_memo(spark, sf_dir):
     a = load_table(spark, sf_dir, "documents")
     assert tables._TABLE_MEMO[spark]

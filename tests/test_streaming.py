@@ -132,15 +132,77 @@ def test_tolerance_within_budget_diverts_to_dlq(spark):
 
 def test_tolerance_exceeded_halts(spark):
     df = make_events(spark, 100)
+    calls = []
     fn = tolerant_foreach_batch(
         ok=F.col("payload").cast("string").cast("int") >= 10,  # 10% bad
-        process=lambda b, i: None,
+        process=lambda b, i: calls.append("process"),
+        dlq=lambda b, i: calls.append("dlq"),
         tolerance_pct=0.25,
     )
     with pytest.raises(ToleranceExceededError) as ei:
         fn(df, 7)
     assert ei.value.failed == 10
     assert ei.value.batch_id == 7
+    assert calls == []  # the halt comes before either sink runs
+
+
+def _jobs_before_first_sink(spark, ok):
+    """Spark jobs one ``tolerant_foreach_batch`` call launches before its
+    first sink (DLQ or process) runs."""
+
+    def next_job_id():
+        return int(spark.sparkContext._jsc.sc().dagScheduler().nextJobId())
+
+    df = make_events(spark, 100)
+    at_sink = []
+
+    def sink(b, i):
+        if not at_sink:
+            at_sink.append(next_job_id())
+
+    fn = tolerant_foreach_batch(ok=ok, process=sink, dlq=sink, tolerance_pct=100.0)
+    j0 = next_job_id()
+    fn(df, 0)
+    return at_sink[0] - j0
+
+
+def test_tolerance_round_is_one_spark_job(spark):
+    seq = F.col("payload").cast("string").cast("int")
+    assert _jobs_before_first_sink(spark, seq >= 0) == 1  # no failures
+    assert _jobs_before_first_sink(spark, seq != 13) == 2  # one retry round
+
+
+def test_tolerance_random_predicate_splits_batch_exactly(spark):
+    # a non-deterministic predicate: every row lands in exactly one sink
+    df = make_events(spark, 200)
+    good, dlq = [], []
+    fn = tolerant_foreach_batch(
+        ok=F.rand(7) < 0.5,
+        process=lambda b, i: good.extend(r.sequence_number for r in b.collect()),
+        dlq=lambda b, i: dlq.extend(r.sequence_number for r in b.collect()),
+        tolerance_pct=100.0,
+    )
+    fn(df, 0)
+    assert good and dlq
+    assert len(set(good)) == len(good) and len(set(dlq)) == len(dlq)
+    assert not set(good) & set(dlq)
+    assert sorted(good + dlq) == [f"{i:020d}" for i in range(200)]
+
+
+def test_tolerance_empty_batch_passes_through(spark):
+    empty = [
+        make_events(spark, 0),
+        spark.createDataFrame(spark.sparkContext.emptyRDD(), EVENT_SCHEMA),
+    ]
+    for df in empty:
+        seen = []
+        fn = tolerant_foreach_batch(
+            ok=F.col("payload").isNotNull(),
+            process=lambda b, i: seen.append(("process", b.count())),
+            dlq=lambda b, i: seen.append(("dlq", b.count())),
+        )
+        fn(df, 0)
+        assert seen == [("process", 0)]
 
 
 def _flaky_predicate(marker_dir: str):
@@ -499,6 +561,28 @@ def test_idempotent_sink_replay_produces_no_duplicates(spark, tmp_path):
     seqs = sorted(r.sequence_number for r in got.collect())
     assert seqs == sorted(
         [f"{i:020d}" for i in range(10)] + [f"{100+i:020d}" for i in range(5)]
+    )
+
+
+def test_idempotent_sink_replay_replaces_sub_partitions(spark, tmp_path):
+    """A replay whose batch lacks a sub-partition the first attempt wrote
+    must not leave that sub-partition's rows behind."""
+    from reactive_kinesis_spark.streaming.sink import idempotent_foreach_batch
+
+    out = str(tmp_path / "out")
+    sinkfn = idempotent_foreach_batch(out, partition_by=("shard_id",))
+
+    b0 = make_events(spark, 10, shards=2)
+    sinkfn(b0, 0)  # first attempt: both shards
+    sinkfn(b0.where(F.col("shard_id") == f"shardId-{0:012d}"), 0)  # replay: shard 0 only
+    sinkfn(make_events(spark, 4, shards=2, start=100), 1)
+
+    got = spark.read.parquet(out)
+    assert "_batch_id" in got.columns and "shard_id" in got.columns
+    rows = sorted((r._batch_id, r.shard_id, r.sequence_number) for r in got.collect())
+    assert rows == sorted(
+        [(0, f"shardId-{0:012d}", f"{i:020d}") for i in range(0, 10, 2)]
+        + [(1, f"shardId-{i % 2:012d}", f"{100 + i:020d}") for i in range(4)]
     )
 
 
