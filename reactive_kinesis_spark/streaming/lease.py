@@ -8,17 +8,14 @@ rebalance intervals; proven live in
 round 6 the engine's analog was *manual*: a static ``shards=`` split per
 query, takeover = a human starting a replacement query. This module closes
 that gap with a small protocol that N independent streaming queries run
-against a shared :class:`LeaseStore` — a 4-primitive key-document table
-(read/write/list/delete, each atomic last-writer-wins). Three backends
-ship: :class:`FileLeaseStore` (a shared posix/NFS/HDFS directory, atomic
-rename), :class:`SqliteLeaseStore` (a transactional database file — the
-JDBC-lease-table analog; a production Postgres/MySQL/Delta backend is the
-same 4 methods over its own transaction primitive), and
-:class:`CasLeaseStore` (the object-store path: a conditional-write
-version-CAS over the :class:`ConditionalKV` seam — DynamoDB
-ConditionExpression, S3 If-Match, GCS generation preconditions). All pass
-the identical protocol test suite (tests/test_lease.py is parameterized
-over backends, including the multi-process SIGKILL failover e2e).
+against one :class:`FileLeaseStore` — a shared posix/NFS/HDFS directory
+of JSON documents (read/write/list/delete). The protocol needs exactly
+one thing from its store: single-document writes that are atomic, never
+torn, and last-writer-wins. Its read-then-write steps
+(``record_checkpoint``, ``sync``, ``release_pending``) are separate
+``read`` and ``write`` calls whatever the store. An ``os.replace`` gives
+that guarantee, so a database or conditional-write (CAS) backend would
+add nothing; SCALING.md records the decision.
 
 Protocol (everything is crash-safe last-writer-wins via atomic rename):
 
@@ -78,31 +75,12 @@ def seq_max(a: str, b: str) -> str:
     return a if _seq_key(a) >= _seq_key(b) else b
 
 
-class LeaseStore:
-    """Backend seam: an atomic key-document table with two namespaces
-    (``workers``, ``leases``). Every method must be safe under concurrent
-    writers from DIFFERENT PROCESSES/HOSTS; ``write`` is last-writer-wins
-    and must never expose a torn document to a concurrent ``read``. A
-    backend that can't guarantee that (e.g. plain object-store PUTs with
-    read-modify-write races) must not be used for lease coordination."""
-
-    def read(self, kind: str, name: str) -> dict | None:
-        raise NotImplementedError
-
-    def write(self, kind: str, name: str, payload: dict) -> None:
-        raise NotImplementedError
-
-    def list(self, kind: str) -> list[str]:
-        raise NotImplementedError
-
-    def delete(self, kind: str, name: str) -> None:
-        raise NotImplementedError
-
-
-class FileLeaseStore(LeaseStore):
-    """Shared-directory backend: one JSON file per document, atomic via
-    ``os.replace`` (posix/NFS/HDFS — NOT plain object stores, which lack
-    atomic rename; use :class:`SqliteLeaseStore` or a JDBC analog there)."""
+class FileLeaseStore:
+    """The lease table: a shared directory with two namespaces
+    (``workers``, ``leases``), one JSON file per document. ``write`` is an
+    atomic last-writer-wins ``os.replace`` (posix/NFS/HDFS), so a
+    concurrent ``read`` from another process or host never sees a torn
+    document — the one guarantee the protocol needs from its store."""
 
     def __init__(self, path: str):
         self._root = path
@@ -147,304 +125,20 @@ class FileLeaseStore(LeaseStore):
             pass
 
 
-class SqliteLeaseStore(LeaseStore):
-    """Transactional-table backend (the KCL's DynamoDB / a JDBC lease
-    table, in stdlib form): one ``docs(kind, name, payload)`` table,
-    ``INSERT OR REPLACE`` per write, WAL mode + busy timeout for
-    cross-process concurrency. A connection per operation keeps the store
-    fork-safe (sqlite connections must not cross ``fork``) — lease traffic
-    is a handful of tiny rows per micro-batch, so connection cost is
-    irrelevant. Production swap: same four methods over Postgres/MySQL
-    (or a Delta table with conditional update)."""
-
-    def __init__(self, db_path: str):
-        self._db = db_path
-        con = self._conn()
-        try:
-            with con:
-                con.execute(
-                    "CREATE TABLE IF NOT EXISTS docs ("
-                    " kind TEXT NOT NULL, name TEXT NOT NULL,"
-                    " payload TEXT NOT NULL,"
-                    " PRIMARY KEY (kind, name))"
-                )
-        finally:
-            con.close()
-
-    def _conn(self):
-        import sqlite3
-
-        con = sqlite3.connect(self._db, timeout=30.0)
-        con.execute("PRAGMA journal_mode=WAL")
-        con.execute("PRAGMA busy_timeout=30000")
-        return con
-
-    def read(self, kind: str, name: str) -> dict | None:
-        # `with con:` only scopes the transaction — close() must be
-        # explicit or file descriptors / WAL handles leak per heartbeat
-        # on runtimes without eager refcount finalization
-        con = self._conn()
-        try:
-            with con:
-                row = con.execute(
-                    "SELECT payload FROM docs WHERE kind=? AND name=?",
-                    (kind, name),
-                ).fetchone()
-        finally:
-            con.close()
-        if row is None:
-            return None
-        try:
-            return json.loads(row[0])
-        except json.JSONDecodeError:
-            return None
-
-    def write(self, kind: str, name: str, payload: dict) -> None:
-        con = self._conn()
-        try:
-            with con:
-                con.execute(
-                    "INSERT OR REPLACE INTO docs (kind, name, payload)"
-                    " VALUES (?,?,?)",
-                    (kind, name, json.dumps(payload)),
-                )
-        finally:
-            con.close()
-
-    def list(self, kind: str) -> list[str]:
-        con = self._conn()
-        try:
-            with con:
-                rows = con.execute(
-                    "SELECT name FROM docs WHERE kind=? ORDER BY name", (kind,)
-                ).fetchall()
-        finally:
-            con.close()
-        return [r[0] for r in rows]
-
-    def delete(self, kind: str, name: str) -> None:
-        con = self._conn()
-        try:
-            with con:
-                con.execute(
-                    "DELETE FROM docs WHERE kind=? AND name=?", (kind, name)
-                )
-        finally:
-            con.close()
-
-
-class ConditionalKV:
-    """Substrate seam for :class:`CasLeaseStore`: a versioned KV with ONE
-    atomic primitive — conditional create/replace at an expected version
-    (compare-and-swap). This is the contract object stores and KV
-    services actually offer where posix rename doesn't exist:
-    DynamoDB ``PutItem`` + ``ConditionExpression`` on a version
-    attribute (the KCL's own lease-table mechanism), S3 conditional
-    writes (``If-Match``/``If-None-Match`` ETag preconditions), GCS
-    ``ifGenerationMatch``, etcd/ZooKeeper versioned set. Implement these
-    four methods over any of them and the lease protocol runs unchanged.
-    """
-
-    def get(self, key: str) -> tuple[dict | None, int]:
-        """(document, version); (None, 0) when absent."""
-        raise NotImplementedError
-
-    def put_if(self, key: str, value: dict, expected_version: int) -> bool:
-        """Install ``value`` as ``expected_version + 1`` iff the current
-        version is exactly ``expected_version`` (0 = must not exist).
-        Atomic across processes/hosts; False on a lost race."""
-        raise NotImplementedError
-
-    def delete(self, key: str) -> None:
-        raise NotImplementedError
-
-    def list(self, prefix: str) -> list[str]:
-        raise NotImplementedError
-
-
-class FileConditionalKV(ConditionalKV):
-    """Posix emulation of a conditional-write object store, for tests and
-    shared-filesystem deployments: each document is a directory of
-    immutable version files ``v<version>.json``, and the CAS primitive is
-    ``os.link`` — creating the next version's link fails with EEXIST iff
-    another writer installed that version first, which is exactly the
-    conditional-create semantics of the cloud substrates listed on
-    :class:`ConditionalKV` (no locks, no lock-staleness problem, safe
-    under SIGKILL at any instruction). Superseded versions are garbage-
-    collected opportunistically after a successful CAS (the newest two
-    are kept so an in-flight reader never loses the file under it)."""
-
-    def __init__(self, root: str):
-        self._root = root
-        os.makedirs(root, exist_ok=True)
-
-    def _dir(self, key: str) -> str:
-        return os.path.join(self._root, key)
-
-    @staticmethod
-    def _ver(fname: str) -> int:
-        return int(fname[1 : -len(".json")])
-
-    def _versions(self, key: str) -> list[int]:
-        try:
-            names = os.listdir(self._dir(key))
-        except OSError:
-            return []
-        out = []
-        for n in names:
-            if n.startswith("v") and n.endswith(".json"):
-                try:
-                    out.append(self._ver(n))
-                except ValueError:
-                    continue
-        return sorted(out)
-
-    # How many times get() re-lists after every listed version failed to
-    # open. Races with concurrent CAS+GC clear within one fresh listing;
-    # a version that is STILL unreadable after this many fresh listings
-    # is persistently broken (EACCES, corrupt FS), not racing.
-    _GET_RELIST_ATTEMPTS = 4
-
-    def get(self, key: str) -> tuple[dict | None, int]:
-        # newest-first. A listed version file can vanish mid-read when
-        # concurrent CAS writes land after our listing: the GC keeps only
-        # the two newest versions, so the vanished ones are exactly the
-        # OLDER entries of our stale listing — falling back within the
-        # same listing can therefore exhaust without the document ever
-        # being absent. When every listed version fails to open, RE-LIST
-        # and try again: a fresh listing always contains the currently
-        # installed newest version (version files are immutable and
-        # fsynced before they are linked). An empty fresh listing means
-        # genuinely absent/deleted. The re-list is BOUNDED: a version
-        # that persists across fresh listings yet never opens is not a
-        # race but a broken store (persistent EACCES, torn FS) — raise
-        # loudly rather than livelock the lease read path.
-        last_err: Exception | None = None
-        for attempt in range(self._GET_RELIST_ATTEMPTS):
-            if attempt:
-                # back off before re-listing: a sustained burst of
-                # concurrent CAS+GC can win the list->open race several
-                # times in a tight loop against a perfectly healthy
-                # store — a few ms of daylight lets the installing
-                # writer finish, so 4 attempts separate "busy" from
-                # "broken" instead of false-alarming under contention
-                time.sleep(0.002 * (1 << attempt))
-            versions = self._versions(key)
-            for v in reversed(versions):
-                try:
-                    with open(os.path.join(self._dir(key), f"v{v}.json")) as fh:
-                        return json.load(fh), v
-                except (OSError, json.JSONDecodeError) as e:
-                    last_err = e
-                    continue
-            if not versions:
-                return None, 0
-        raise OSError(
-            f"conditional-kv get({key!r}): no listed version readable after "
-            f"{self._GET_RELIST_ATTEMPTS} fresh listings (versions persist "
-            f"but cannot be opened — store is corrupt or unreadable): {last_err}"
+def _check_lease_dir(path: str) -> str:
+    """Reject a ``leaseDir`` spelled as one of the sqlite or
+    conditional-write backends earlier versions shipped. Taken as a
+    directory, ``sqlite:/shared/l.db`` is RELATIVE — a private lease
+    table under each worker's cwd — so workers on different hosts would
+    never see each other and each would poll every shard (double
+    delivery)."""
+    if path.startswith(("sqlite:", "cas:")) or path.endswith((".db", ".sqlite")):
+        raise ValueError(
+            f"leaseDir {path!r} names a database or conditional-write lease "
+            "backend; leaseDir takes a shared directory (posix/NFS/HDFS) "
+            "that every worker mounts"
         )
-
-    def put_if(self, key: str, value: dict, expected_version: int) -> bool:
-        d = self._dir(key)
-        os.makedirs(d, exist_ok=True)
-        current = self._versions(key)
-        if (current[-1] if current else 0) != expected_version:
-            return False  # cheap pre-check; the link below is the arbiter
-        tmp = os.path.join(d, f".tmp.{os.getpid()}.{id(value)}.{time.time_ns()}")
-        with open(tmp, "w") as fh:
-            json.dump(value, fh)
-            fh.flush()
-            os.fsync(fh.fileno())  # a linked version must be durably complete:
-            # get() treats "listed but unreadable" as store corruption, so a
-            # torn v<N>.json surviving a crash would be a false corruption alarm
-        target = os.path.join(d, f"v{expected_version + 1}.json")
-        try:
-            os.link(tmp, target)  # atomic conditional create: the CAS
-        except FileExistsError:
-            return False
-        finally:
-            try:
-                os.remove(tmp)
-            except OSError:
-                pass
-        for v in current[:-1]:  # GC all but the two newest versions
-            try:
-                os.remove(os.path.join(d, f"v{v}.json"))
-            except OSError:
-                pass
-        return True
-
-    def delete(self, key: str) -> None:
-        import shutil
-
-        shutil.rmtree(self._dir(key), ignore_errors=True)
-
-    def list(self, prefix: str) -> list[str]:
-        base = os.path.join(self._root, prefix)
-        try:
-            names = os.listdir(base)
-        except OSError:
-            return []
-        return sorted(
-            n
-            for n in names
-            if self._versions(os.path.join(prefix, n))
-        )
-
-
-class CasLeaseStore(LeaseStore):
-    """Object-store backend: the lease protocol over a conditional-write
-    KV (:class:`ConditionalKV` — DynamoDB version-CAS, S3 If-Match, GCS
-    generation preconditions). ``write`` is a read-CAS retry loop: fetch
-    the current version, conditionally install the successor, retry on a
-    lost race — last-writer-wins is preserved (every retry re-reads),
-    and a concurrent reader only ever sees a complete installed version,
-    never a torn document. This is the deployment path where neither a
-    posix rename (:class:`FileLeaseStore`) nor a transactional database
-    (:class:`SqliteLeaseStore`) is available — i.e. plain S3/GCS/DynamoDB
-    — closing the round-7 "both shipped backends need a posix
-    filesystem" gap."""
-
-    def __init__(self, kv: ConditionalKV):
-        self._kv = kv
-
-    @staticmethod
-    def _key(kind: str, name: str) -> str:
-        return os.path.join(kind, name)
-
-    def read(self, kind: str, name: str) -> dict | None:
-        return self._kv.get(self._key(kind, name))[0]
-
-    def write(self, kind: str, name: str, payload: dict) -> None:
-        key = self._key(kind, name)
-        while True:
-            _, ver = self._kv.get(key)
-            if self._kv.put_if(key, payload, ver):
-                return
-
-    def list(self, kind: str) -> list[str]:
-        return self._kv.list(kind)
-
-    def delete(self, kind: str, name: str) -> None:
-        self._kv.delete(self._key(kind, name))
-
-
-def resolve_store(path_or_store) -> LeaseStore:
-    """``LeaseStore`` passthrough; ``sqlite:<file>`` / ``*.db`` / ``*.sqlite``
-    strings → :class:`SqliteLeaseStore`; ``cas:<dir>`` → the conditional-
-    write backend over :class:`FileConditionalKV`; any other string → a
-    shared directory (:class:`FileLeaseStore`)."""
-    if isinstance(path_or_store, LeaseStore):
-        return path_or_store
-    s = str(path_or_store)
-    if s.startswith("sqlite:"):
-        return SqliteLeaseStore(s[len("sqlite:") :])
-    if s.startswith("cas:"):
-        return CasLeaseStore(FileConditionalKV(s[len("cas:") :]))
-    if s.endswith((".db", ".sqlite")):
-        return SqliteLeaseStore(s)
-    return FileLeaseStore(s)
+    return path
 
 
 class LeaseCoordinator:
@@ -456,14 +150,14 @@ class LeaseCoordinator:
 
     def __init__(
         self,
-        path: str | LeaseStore,
+        path: str,
         worker_id: str,
         failover_time_millis: int = 10_000,
         clock_ms: Callable[[], int] | None = None,
     ):
         if not worker_id or "/" in worker_id:
             raise ValueError(f"invalid worker_id {worker_id!r}")
-        self._store = resolve_store(path)
+        self._store = FileLeaseStore(_check_lease_dir(str(path)))
         self.worker_id = worker_id
         self.failover_time_millis = int(failover_time_millis)
         self._clock_ms = clock_ms or (lambda: int(time.time() * 1000))

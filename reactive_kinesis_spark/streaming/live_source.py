@@ -40,9 +40,8 @@ sequential), ``shards`` (explicit subset
 — the L1 shard-assignment analog), ``leaseDir`` + ``workerId`` +
 ``failoverTimeMillis`` (automatic lease coordination between N concurrent
 consumers — heartbeats, cooperative rebalance, dead-worker takeover from
-the lease checkpoint; a shared directory, or ``sqlite:<file>`` / a
-``*.db`` path for the transactional lease-table backend — see
-:mod:`.lease`), ``deaggregate`` (true = KCL-style KPL
+the lease checkpoint; ``leaseDir`` is a shared directory every worker
+mounts — see :mod:`.lease`), ``deaggregate`` (true = KCL-style KPL
 deaggregation with sub-sequence numbers), ``transport`` (factory name,
 default ``boto3``) + ``region``/``endpointUrl``/``profile``.
 

@@ -13,10 +13,11 @@ pre-aggregated partition per micro-batch, and :func:`compact_rollup`
 periodically folds them into the base.
 
 Exactly-once: Structured Streaming replays ``foreachBatch`` with the
-SAME batchId after a crash, so each delta is written under a
-``_batch_id=<id>`` partition with dynamic-partition overwrite — a
-replay overwrites its own previous (possibly partial) attempt instead
-of double-counting (the ``sink.idempotent_foreach_batch`` rule).
+SAME batchId after a crash, so each delta is written straight to its
+own ``_batch_id=<id>`` directory with a plain overwrite — a replay
+overwrites its own previous (possibly partial) attempt instead of
+double-counting, and no other batch's directory is touched (the
+``sink.idempotent_foreach_batch`` rule).
 Compaction writes a brand-new versioned base dir (data + embedded
 ``_meta.json`` watermark) and flips ONE manifest file to it with an
 atomic ``os.replace`` — readers see either the old base+deltas or the
@@ -245,20 +246,12 @@ def continuous_rollup(out_dir: str, spec: RollupSpec, force_takeover: bool = Fal
 
     def write(batch_df: DataFrame, batch_id: int) -> None:
         _check_rollup_writer(out_dir, token)
-        spark = batch_df.sparkSession
         partials = batch_df.groupBy(*spec.keys).agg(*spec.partial_aggs())
-        prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            (
-                partials.withColumn("_batch_id", F.lit(batch_id))
-                .repartition(1)  # a delta is a tiny pre-aggregated frame
-                .write.mode("overwrite")
-                .partitionBy("_batch_id")
-                .parquet(delta_dir)
-            )
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+        (
+            partials.repartition(1)  # a delta is a tiny pre-aggregated frame
+            .write.mode("overwrite")
+            .parquet(os.path.join(delta_dir, f"_batch_id={batch_id}"))
+        )
 
     return write
 

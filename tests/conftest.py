@@ -31,18 +31,3 @@ def ddb():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
-
-
-def pytest_collection_modifyitems(config, items):
-    """Under SPARK_GRAFT_FAST_VERIFY=1, skip the minute-scale reliability
-    e2e tests (marked ``slow_e2e``) so a time-boxed verification window
-    completes with a summary line — the driver's r14 VERIFY run truncated
-    at 87% after ~42 min, leaving ``tests_ok`` unknowable. The full suite
-    (including these tests) still gates every round via
-    tools/round_end.py."""
-    if os.environ.get("SPARK_GRAFT_FAST_VERIFY") != "1":
-        return
-    skip = pytest.mark.skip(reason="SPARK_GRAFT_FAST_VERIFY=1: slow_e2e skipped")
-    for item in items:
-        if "slow_e2e" in item.keywords:
-            item.add_marker(skip)

@@ -6,11 +6,13 @@ the lease checkpoint — the KCL failoverTimeMillis analog
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from reactive_kinesis_spark.streaming.lease import (
+    FileLeaseStore,
     LeaseCoordinator,
-    resolve_store,
     seq_max,
 )
 
@@ -28,17 +30,10 @@ class FakeClock:
         self.now += ms
 
 
-@pytest.fixture(params=["dir", "sqlite", "cas"])
-def lease_path(tmp_path, request):
-    """Every protocol test runs against ALL LeaseStore backends: the
-    shared-directory store (atomic rename), the sqlite store (the
-    JDBC-lease-table analog), and the conditional-write CAS store (the
-    DynamoDB/S3-preconditions analog) — the backend seam must not
-    change any protocol behavior."""
-    if request.param == "sqlite":
-        return str(tmp_path / "leases.db")
-    if request.param == "cas":
-        return "cas:" + str(tmp_path / "leases_cas")
+@pytest.fixture(params=["dir"])
+def lease_path(tmp_path):
+    """The shared lease directory every protocol test runs against; the
+    ``[dir]`` id names the store (the directory store is the only one)."""
     return str(tmp_path / "leases")
 
 
@@ -145,6 +140,29 @@ def test_lost_lease_checkpoint_write_is_a_noop(lease_path):
     a.record_checkpoint("shard-0", _seq(99))  # a no longer owns it
     lease = b._read_lease("shard-0")
     assert lease["owner"] == "b" and lease.get("checkpoint", "") == ""
+
+
+def test_lease_dir_rejects_removed_backend_spellings(tmp_path, monkeypatch):
+    """``sqlite:``/``cas:`` prefixes and ``.db``/``.sqlite`` paths named
+    backends that no longer exist. Read as a directory they are relative
+    (or private to one host), so each worker would get its own lease table
+    and poll every shard; they must fail loudly, before anything is made
+    on disk."""
+    monkeypatch.chdir(tmp_path)
+    for bad in (
+        "sqlite:/shared/leases.db",
+        "cas:/shared/leases",
+        "/shared/leases.db",
+        "leases.sqlite",
+    ):
+        with pytest.raises(ValueError, match="shared directory"):
+            LeaseCoordinator(bad, "a")
+        with pytest.raises(ValueError, match="shared directory"):
+            _reader(_client(), leasedir=bad, workerid="a")
+    assert os.listdir(tmp_path) == []
+    # a plain directory (even one with a dot in its name) is the lease table
+    LeaseCoordinator(str(tmp_path / "leases.v2"), "a").heartbeat()
+    assert os.listdir(tmp_path / "leases.v2" / "workers") == ["a.json"]
 
 
 # ---------------------------------------------------------------------------
@@ -266,7 +284,6 @@ def test_takeover_mid_shard_resumes_after_victims_commit(lease_path):
 # ---------------------------------------------------------------------------
 
 
-@pytest.mark.slow_e2e
 def test_two_streaming_queries_rebalance_after_worker_death(spark, tmp_path, lease_path):
     """Two concurrent kinesis_live queries with the SAME leaseDir split a
     4-shard stream automatically (no `shards=` option); stopping query A
@@ -431,15 +448,13 @@ def test_two_streaming_queries_rebalance_after_worker_death(spark, tmp_path, lea
 
 
 def _read_lease_file(lease_dir: str, sid: str):
-    return resolve_store(lease_dir).read("leases", sid)
+    return FileLeaseStore(lease_dir).read("leases", sid)
 
 
-@pytest.mark.slow_e2e
 def test_multiprocess_kill9_failover_no_loss_no_dup(tmp_path, lease_path):
     """TRUE cross-process contention (round-6 verdict ask #8): two OS
     processes each drive the real `_LiveStreamReader` loop against one
-    4-shard stream and one shared lease store (both backends via the
-    fixture), with REAL wall clocks. After the split settles and phase-1
+    4-shard stream and one shared lease directory, with REAL wall clocks. After the split settles and phase-1
     is fully committed, worker A is killed with SIGKILL; B must take over
     A's shards after failoverTimeMillis and deliver the phase-2 records
     pushed post-mortem. Assertions: no record delivered by both workers
@@ -526,7 +541,7 @@ def test_multiprocess_kill9_failover_no_loss_no_dup(tmp_path, lease_path):
             time.sleep(0.25)
         return False
 
-    store = resolve_store(lease_path)
+    store = FileLeaseStore(lease_path)
 
     def owner(sid: str):
         lease = store.read("leases", sid)
@@ -595,172 +610,3 @@ def test_multiprocess_kill9_failover_no_loss_no_dup(tmp_path, lease_path):
             if p.poll() is None:
                 p.kill()
                 p.wait(timeout=10)
-
-
-def test_cas_kv_conditional_create_is_exclusive(tmp_path):
-    """The CAS primitive itself: two writers at the same expected version
-    — exactly one wins; the loser's retry (at the NEW version) wins."""
-    from reactive_kinesis_spark.streaming.lease import FileConditionalKV
-
-    kv = FileConditionalKV(str(tmp_path / "kv"))
-    assert kv.get("leases/s0") == (None, 0)
-    assert kv.put_if("leases/s0", {"owner": "a"}, 0) is True
-    # a concurrent writer that read version 0 must lose
-    assert kv.put_if("leases/s0", {"owner": "b"}, 0) is False
-    assert kv.get("leases/s0") == ({"owner": "a"}, 1)
-    # retry at the observed version succeeds (the CasLeaseStore loop)
-    assert kv.put_if("leases/s0", {"owner": "b"}, 1) is True
-    assert kv.get("leases/s0") == ({"owner": "b"}, 2)
-    assert kv.list("leases") == ["s0"]
-    kv.delete("leases/s0")
-    assert kv.get("leases/s0") == (None, 0)
-    assert kv.list("leases") == []
-
-
-@pytest.mark.slow_e2e
-def test_cas_kv_multiprocess_contention(tmp_path):
-    """True cross-process CAS: N processes each try to append their id
-    via read-CAS-retry; every append must survive (no lost updates —
-    the property a plain object-store PUT cannot give)."""
-    import subprocess
-    import sys
-
-    root = str(tmp_path / "kv")
-    script = (
-        "import sys\n"
-        "from reactive_kinesis_spark.streaming.lease import FileConditionalKV\n"
-        "kv = FileConditionalKV(sys.argv[1])\n"
-        "me = sys.argv[2]\n"
-        "for i in range(20):\n"
-        "    while True:\n"
-        "        doc, ver = kv.get('k/counter')\n"
-        "        doc = doc or {'appends': []}\n"
-        "        doc['appends'] = doc['appends'] + [f'{me}:{i}']\n"
-        "        if kv.put_if('k/counter', doc, ver):\n"
-        "            break\n"
-    )
-    import os as _os
-    import pathlib
-
-    env = dict(_os.environ)
-    env["PYTHONPATH"] = str(pathlib.Path(__file__).parent.parent)
-    procs = [
-        subprocess.Popen([sys.executable, "-c", script, root, w], env=env)
-        for w in ("a", "b", "c")
-    ]
-    for p in procs:
-        assert p.wait(timeout=60) == 0
-
-    from reactive_kinesis_spark.streaming.lease import FileConditionalKV
-
-    doc, ver = FileConditionalKV(root).get("k/counter")
-    assert ver == 60  # one version per successful CAS
-    assert sorted(doc["appends"]) == sorted(
-        f"{w}:{i}" for w in ("a", "b", "c") for i in range(20)
-    )
-
-
-def test_cas_kv_get_vanished_version_relists_to_installed_head(
-    tmp_path, monkeypatch
-):
-    """The round-9 race fix: when every version in a STALE listing has
-    been GC'd by concurrent CAS writes before we open it, get() must
-    re-list and return the currently installed head — never (None, 0)
-    for a document that exists."""
-    from reactive_kinesis_spark.streaming.lease import FileConditionalKV
-
-    kv = FileConditionalKV(str(tmp_path / "kv"))
-    for i in range(4):
-        assert kv.put_if("k/doc", {"n": i + 1}, i)
-    # put_if's GC keeps only the two newest versions (v3, v4)
-    real_versions = kv._versions
-    calls = {"n": 0}
-
-    def stale_then_real(key):
-        calls["n"] += 1
-        if calls["n"] == 1:
-            return [1, 2]  # a pre-GC listing: both files are gone by now
-        return real_versions(key)
-
-    monkeypatch.setattr(kv, "_versions", stale_then_real)
-    assert kv.get("k/doc") == ({"n": 4}, 4)
-    assert calls["n"] == 2  # exactly one re-list resolved the race
-
-
-def test_cas_kv_get_persistently_unreadable_version_raises_not_hangs(tmp_path):
-    """ADVICE r9: a version that PERSISTS across fresh listings yet never
-    opens (torn/empty file surviving a crash, EACCES) is a broken store,
-    not a race — get() must raise after bounded re-lists, not livelock."""
-    import os
-
-    import pytest as _pytest
-
-    from reactive_kinesis_spark.streaming.lease import FileConditionalKV
-
-    kv = FileConditionalKV(str(tmp_path / "kv"))
-    d = kv._dir("k/doc")
-    os.makedirs(d)
-    open(os.path.join(d, "v7.json"), "w").close()  # torn: zero bytes
-    with _pytest.raises(OSError, match="no listed version readable"):
-        kv.get("k/doc")
-
-
-@pytest.mark.slow_e2e
-def test_cas_lease_store_threaded_write_contention_no_torn_reads(tmp_path):
-    """r8 ask: two writers racing CasLeaseStore.write through the CAS
-    retry loop — every write lands as its own version (versions strictly
-    monotone, one per write), concurrent readers never observe a torn
-    document, and the final document is the last writer's payload."""
-    import threading
-
-    from reactive_kinesis_spark.streaming.lease import (
-        CasLeaseStore,
-        FileConditionalKV,
-    )
-
-    store = CasLeaseStore(FileConditionalKV(str(tmp_path / "kv")))
-    n_writes = 40
-    errors: list[str] = []
-    stop = threading.Event()
-
-    def writer(wid: str) -> None:
-        try:
-            for i in range(n_writes):
-                store.write("leases", "s0", {"owner": wid, "i": i})
-        except Exception as e:  # pragma: no cover - fail loudly
-            errors.append(f"writer {wid}: {e!r}")
-
-    def reader() -> None:
-        last_ver = 0
-        try:
-            while not stop.is_set():
-                doc, ver = store._kv.get("leases/s0")
-                if doc is not None and set(doc) != {"owner", "i"}:
-                    errors.append(f"torn read: {doc!r}")
-                    return
-                if ver < last_ver:
-                    errors.append(f"version went backwards: {last_ver}->{ver}")
-                    return
-                last_ver = ver
-        except Exception as e:  # pragma: no cover - fail loudly
-            errors.append(f"reader: {e!r}")
-
-    threads = [threading.Thread(target=writer, args=(w,)) for w in ("a", "b")]
-    rt = threading.Thread(target=reader)
-    rt.start()
-    for t in threads:
-        t.start()
-    for t in threads:
-        # generous budget: 80 CAS writes with per-version fsyncs can take
-        # minutes in a slow host window (this timed out at 60s mid-suite
-        # on the oscillating-CPU host and then failed the version-count
-        # assert MISLEADINGLY); assert completion so a stall is reported
-        # as a stall, not as lost updates
-        t.join(timeout=300)
-        assert not t.is_alive(), "writer stalled past 300s"
-    stop.set()
-    rt.join(timeout=10)
-    assert errors == []
-    doc, ver = store._kv.get("leases/s0")
-    assert ver == 2 * n_writes  # one version per write: no lost updates
-    assert doc["i"] == n_writes - 1 and doc["owner"] in ("a", "b")

@@ -18,9 +18,6 @@ import sys
 
 import pytest
 
-pytestmark = pytest.mark.slow_e2e  # minute-scale e2e; skipped under SPARK_GRAFT_FAST_VERIFY=1
-
-
 
 def _free_port() -> int:
     with socket.socket() as s:

@@ -500,7 +500,6 @@ def test_streaming_query_drains_with_restart_exactly_once(spark, tmp_path):
             high[sid] = max(seqs)
 
 
-@pytest.mark.slow_e2e
 def test_live_parity_with_replay_parquet_reader(spark, tmp_path):
     """The live transport and the parquet replay reader deliver the same
     record multiset for the same stream content — the data-plane swap is

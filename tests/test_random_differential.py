@@ -14,9 +14,6 @@ import random
 import duckdb
 import pytest
 
-pytestmark = pytest.mark.slow_e2e  # minute-scale e2e; skipped under SPARK_GRAFT_FAST_VERIFY=1
-
-
 from reactive_kinesis_spark.queries import load_all
 from tests.oracle_utils import compare
 

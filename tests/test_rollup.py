@@ -8,8 +8,6 @@ import os
 
 import pytest
 
-pytestmark = pytest.mark.slow_e2e  # minute-scale e2e; skipped under SPARK_GRAFT_FAST_VERIFY=1
-
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -109,6 +107,36 @@ def test_replayed_batch_does_not_double_count(spark, tmp_path):
     writer(batch_df, 0)
     writer(batch_df, 0)
     assert _snapshot(spark, out_dir) == before
+
+
+def test_rollup_batch_never_touches_session_overwrite_mode(
+    spark, tmp_path, monkeypatch
+):
+    """A delta write must not flip the session-wide
+    ``partitionOverwriteMode``: any other query in the session would race
+    the flip. Each batch overwrites only its own ``_batch_id=<id>`` dir."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    set_keys = []
+    real_set = RuntimeConfig.set
+
+    def spy(self, key, value):
+        set_keys.append(key)
+        return real_set(self, key, value)
+
+    monkeypatch.setattr(RuntimeConfig, "set", spy)
+    out_dir = str(tmp_path / "roll")
+    writer = continuous_rollup(out_dir, SPEC)
+    batch_df = spark.createDataFrame([("a", 1), ("b", 2)], SCHEMA)
+    writer(batch_df, 0)
+    writer(batch_df, 0)  # a replay overwrites its own delta
+    writer(spark.createDataFrame([("a", 4)], SCHEMA), 1)
+    assert "spark.sql.sources.partitionOverwriteMode" not in set_keys
+    assert sorted(os.listdir(os.path.join(out_dir, "deltas"))) == [
+        "_batch_id=0",
+        "_batch_id=1",
+    ]
+    assert _snapshot(spark, out_dir) == {"a": (2, 5, 1, 4), "b": (1, 2, 2, 2)}
 
 
 def test_compaction_preserves_results_and_advances_watermark(spark, tmp_path):

@@ -202,7 +202,6 @@ def test_funnel_matches_python_greedy_on_random_sequences(spark):
     assert {**got, **missing} == expected
 
 
-@pytest.mark.slow_e2e
 def test_funnel_stream_matches_batch(spark, tmp_path):
     """The funnel state machine applied under readStream (complete output
     mode — collect_list carries unordered per-user state, so the fold's
@@ -305,7 +304,6 @@ def test_snapshot_diff_statuses(spark):
     assert out == {1: "removed", 2: "unchanged", 3: "changed", 4: "added"}
 
 
-@pytest.mark.slow_e2e
 def test_every_query_survives_empty_tables(spark, sf_dir, tmp_path):
     """Degenerate-input robustness: every registered query over ZERO-row
     copies of all ten tables must either produce a well-formed (possibly
@@ -339,7 +337,6 @@ def test_every_query_survives_empty_tables(spark, sf_dir, tmp_path):
     assert not failures, "\n".join(failures)
 
 
-@pytest.mark.slow_e2e
 def test_every_query_survives_null_injection(spark, sf_dir, tmp_path):
     """Degenerate-VALUE robustness: inject null/empty text, null
     lang/source, null/empty embeddings, and a fully-null event row, then

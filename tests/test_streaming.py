@@ -473,7 +473,6 @@ def test_streaming_sink_end_to_end(spark, tmp_path):
 # ---------------------------------------------------------------------------
 
 
-@pytest.mark.slow_e2e
 def test_per_shard_contiguity_soak(spark):
     """Pit-stop check: sequential payloads per shard arrive gap-free and
     duplicate-free after a shuffle + reorder (SimpleKinesisConsumer

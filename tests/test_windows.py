@@ -61,7 +61,6 @@ def test_windowed_aggregate_batch_and_stream_agree(spark, tmp_path):
     assert sorted(final.items()) == sorted((r.window_start, r.n_events) for r in batch)
 
 
-@pytest.mark.slow_e2e
 def test_late_data_dropped_by_watermark(spark, tmp_path):
     src = str(tmp_path / "stream")
     # batch 1: on-time events up to T0+100s; batch 2 (separate file): an
@@ -203,7 +202,6 @@ def test_transform_with_state_matches_applyinpandas(spark, tmp_path):
         spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
 
 
-@pytest.mark.slow_e2e
 def test_ewma_running_level_stream_equals_batch(spark, tmp_path):
     """The bounded-state streaming EWMA must reproduce the batch q136
     fold BIT-identically when each key's rows arrive in order across
@@ -347,7 +345,6 @@ def test_ewma_multi_chunk_arrow_batches_fold_in_order(spark, tmp_path):
     assert _ewma_final(out) == want  # == on floats: bit-identity
 
 
-@pytest.mark.slow_e2e
 def test_ewma_out_of_order_across_batches_folds_in_arrival_order(
     spark, tmp_path
 ):
