@@ -42,7 +42,9 @@ class ConsumerConfig:
     max_records: int = 10_000
     # worker.batchTimeoutSeconds (reference.conf:413-417)
     batch_timeout_seconds: int = 10
-    # worker.failedMessageRetries (reference.conf:419-422)
+    # worker.failedMessageRetries (reference.conf:419-422); in-batch
+    # retries apply only to a non-deterministic predicate, so mark a flaky
+    # one asNondeterministic() (streaming.tolerance.tolerant_foreach_batch)
     failed_message_retries: int = 1
     # worker.failureTolerancePercentage (reference.conf:424-430)
     failure_tolerance_percentage: float = 0.25

@@ -116,8 +116,15 @@ class MetricsReporter(StreamingQueryListener):
         spark.streams.removeListener(self)
 
     def drain(self) -> list[dict]:
-        """Return and clear the in-memory metric buffer (default sink)."""
-        out, self.metrics[:] = list(self.metrics), []
+        """Return and clear the in-memory metric buffer (default sink).
+
+        Only the items present at the call are taken: the listener-bus
+        thread may append while this runs, and what it appends stays for
+        the next drain instead of being lost between a copy and a clear.
+        """
+        n = len(self.metrics)
+        out = self.metrics[:n]
+        del self.metrics[:n]
         return out
 
     # -- StreamingQueryListener ------------------------------------------

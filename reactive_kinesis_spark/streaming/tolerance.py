@@ -17,10 +17,12 @@ restart), and the query terminates with the error (L3's escalation).
 
 from __future__ import annotations
 
+import threading
 from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 
 class ToleranceExceededError(RuntimeError):
@@ -62,10 +64,14 @@ def tolerant_foreach_batch(
     that succeed on retry into the good set — the reference's in-batch
     retry of unconfirmed events (consumer/ConsumerWorker.scala:385-394;
     default 1 mirrors ``failed-message-retries``, reference.conf:419-422;
-    behavior matrix ConsumerWorkerSpec.scala:302-461). Transient per-record
-    failures (flaky external lookups in the predicate) clear on retry and
-    never reach the DLQ; deterministic failures cost one cheap extra
-    evaluation of the (tiny) failed subset.
+    behavior matrix ConsumerWorkerSpec.scala:302-461).
+
+    The retry rule: only a non-deterministic ``ok`` is retried. Spark
+    promises a deterministic expression the same answer on the same row,
+    so retrying one can never promote a row; its determinism is read once,
+    from the resolved expression, and cached. A predicate whose failures
+    are transient (a flaky external lookup in a UDF) must therefore be
+    marked ``asNondeterministic()`` to get its in-batch retries.
 
     Each evaluation round runs ONE Spark job: the flagged rows are
     observed (row and failure counts) and persisted, and a ``noop`` write
@@ -73,8 +79,23 @@ def tolerant_foreach_batch(
     is therefore evaluated exactly once per round, so a non-deterministic
     predicate cannot give inconsistent answers between the good/bad
     splits of one round. A zero-failure batch costs one job before
-    ``process`` runs; each retry round adds one.
+    ``process`` runs; each retry round of a non-deterministic predicate
+    adds one.
+
+    The halt raises before either sink runs. Within tolerance, a batch
+    with failures runs ``dlq`` on a helper thread while ``process`` runs
+    on the caller's: both read the same pinned rows, both are awaited
+    before the batch returns (the first error is re-raised), and there is
+    no ordering between them — ``foreachBatch`` is at-least-once and
+    replays a failed batch whole, so the sinks must be idempotent anyway.
     """
+    deterministic: list[bool] = []  # cached once per wrapper
+
+    def is_deterministic(df: DataFrame) -> bool:
+        if not deterministic:
+            resolved = df.select(ok.alias("__ok"))._jdf.queryExecution().analyzed()
+            deterministic.append(bool(resolved.expressions().head().deterministic()))
+        return deterministic[0]
 
     def run(batch_df: DataFrame, batch_id: int) -> None:
         pinned: list[DataFrame] = []
@@ -100,7 +121,8 @@ def tolerant_foreach_batch(
             flagged, total, failed = flag(batch_df)
             good = flagged.where(F.col("__ok")).drop("__ok")
             bad = flagged.where(~F.col("__ok")).drop("__ok")
-            for _ in range(failed_message_retries):
+            retry = failed and not is_deterministic(batch_df)
+            for _ in range(failed_message_retries if retry else 0):
                 if not failed:
                     break
                 reflagged, _, failed = flag(bad)
@@ -109,13 +131,46 @@ def tolerant_foreach_batch(
             if total and 100.0 * failed / total > tolerance_pct:
                 raise ToleranceExceededError(batch_id, failed, total, tolerance_pct)
             if failed and dlq is not None:
-                dlq(bad, batch_id)
-            process(good, batch_id)
+                _beside(
+                    batch_df.sparkSession,
+                    lambda: dlq(bad, batch_id),
+                    lambda: process(good, batch_id),
+                )
+            else:
+                process(good, batch_id)
         finally:
             for df in pinned:
                 df.unpersist()
 
     return run
+
+
+def _beside(session, side: Callable[[], None], main: Callable[[], None]) -> None:
+    """Run ``side`` on a helper thread while ``main`` runs on this one.
+
+    The helper inherits this thread's Spark job group, local properties
+    and tags, so a stopping query cancels its jobs too. Both are awaited
+    and the first error raised is re-raised; the helper never outlives
+    the call.
+    """
+    errors: list[BaseException] = []
+
+    def attempt(fn: Callable[[], None]) -> None:
+        try:
+            fn()
+        except BaseException as e:  # re-raised by the caller below
+            errors.append(e)
+
+    helper = threading.Thread(
+        target=inheritable_thread_target(session)(attempt), args=(side,), daemon=True
+    )
+    helper.start()
+    try:
+        attempt(main)
+    finally:
+        helper.join()
+    if errors:
+        raise errors[0]
 
 
 class QualityGateError(RuntimeError):

@@ -182,6 +182,37 @@ def test_custom_emit_sink_receives_metrics():
     assert len(sink) == 1 and r.metrics == []  # custom sink, not the buffer
 
 
+def test_drain_loses_nothing_appended_concurrently():
+    """The listener-bus thread appends while a caller drains: every metric
+    is either returned by some drain or still buffered, never dropped."""
+    import sys
+    import threading
+
+    r = MetricsReporter()
+    n = 200_000
+    done = threading.Event()
+
+    def listener_bus():
+        for i in range(n):
+            r._emit({"i": i})
+        done.set()
+
+    drained: list[dict] = []
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)  # switch threads often, so the race shows
+    try:
+        t = threading.Thread(target=listener_bus)
+        t.start()
+        while not done.is_set():
+            drained.extend(r.drain())
+        t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not t.is_alive()
+    got = [m["i"] for m in drained + r.metrics]
+    assert got == list(range(n))
+
+
 def test_real_streaming_query_emits_per_batch_and_shard_metrics(spark, tmp_path):
     """Integration: a real kinesis_replay query with the reporter attached
     emits batch_records / stream_records / shard_position series, and the

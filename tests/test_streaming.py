@@ -169,7 +169,99 @@ def _jobs_before_first_sink(spark, ok):
 def test_tolerance_round_is_one_spark_job(spark):
     seq = F.col("payload").cast("string").cast("int")
     assert _jobs_before_first_sink(spark, seq >= 0) == 1  # no failures
-    assert _jobs_before_first_sink(spark, seq != 13) == 2  # one retry round
+    # a deterministic predicate is never retried: a retry cannot promote a row
+    assert _jobs_before_first_sink(spark, seq != 13) == 1
+    assert _jobs_before_first_sink(spark, F.rand(7) < 0.9) == 2  # one retry round
+
+
+def test_tolerance_deterministic_predicate_retry_changes_nothing(spark):
+    df = make_events(spark, 100)
+    ok = F.col("payload").cast("string").cast("int") % 10 != 3
+
+    def split(retries):
+        good, dlq = [], []
+        tolerant_foreach_batch(
+            ok=ok,
+            process=lambda b, i: good.extend(b.collect()),
+            dlq=lambda b, i: dlq.extend(b.collect()),
+            tolerance_pct=100.0,
+            failed_message_retries=retries,
+        )(df, 0)
+        return sorted(good), sorted(dlq)
+
+    good, dlq = split(1)
+    assert (good, dlq) == split(0)
+    assert len(good) == 90 and len(dlq) == 10
+
+
+def test_tolerance_sinks_share_the_query_job_group(spark, tmp_path):
+    # the DLQ sink runs on a helper thread: its jobs must still belong to
+    # the streaming query's job group, as the process sink's do
+    src = tmp_path / "src"
+    make_events(spark, 100).write.parquet(str(src))
+    groups = {}
+
+    def sink(name):
+        def call(b, i):
+            groups[name] = spark.sparkContext.getLocalProperty("spark.jobGroup.id")
+            b.count()
+
+        return call
+
+    fn = tolerant_foreach_batch(
+        ok=F.col("payload").cast("string").cast("int") != 13,
+        process=sink("process"),
+        dlq=sink("dlq"),
+        tolerance_pct=100.0,
+    )
+    q = (
+        spark.readStream.schema(EVENT_SCHEMA)
+        .parquet(str(src))
+        .writeStream.foreachBatch(fn)
+        .option("checkpointLocation", str(tmp_path / "ck"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    try:
+        assert q.awaitTermination(120)
+    finally:
+        q.stop()
+    assert q.exception() is None
+    assert groups == {"process": str(q.runId), "dlq": str(q.runId)}
+
+
+def test_tolerance_dlq_error_fails_batch_after_both_sinks(spark):
+    import threading
+    import time
+
+    class DlqDown(RuntimeError):
+        pass
+
+    df = make_events(spark, 100)
+    events = []
+
+    def process(b, i):
+        time.sleep(0.5)
+        events.append("process returned")
+
+    def dlq(b, i):
+        events.append("dlq raised")
+        raise DlqDown("dlq sink unavailable")
+
+    fn = tolerant_foreach_batch(
+        ok=F.col("payload").cast("string").cast("int") != 13,
+        process=process,
+        dlq=dlq,
+        tolerance_pct=100.0,
+    )
+    threads = threading.active_count()
+    cached = spark.sparkContext._jsc.getPersistentRDDs().size()
+    with pytest.raises(DlqDown):
+        fn(df, 0)
+    # the sinks ran side by side, and the error waited for process
+    assert events == ["dlq raised", "process returned"]
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == cached
+    assert threading.active_count() == threads
 
 
 def test_tolerance_random_predicate_splits_batch_exactly(spark):
