@@ -22,7 +22,6 @@ from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 from pyspark.sql.types import (
     ArrayType,
     DoubleType,
@@ -33,6 +32,7 @@ from pyspark.sql.types import (
 )
 
 from reactive_kinesis_spark.functions import cosine_similarity
+from reactive_kinesis_spark.operators.dedup import _persist
 
 #: Tuned parameter presets for the two ANN scale paths, measured on the
 #: driver's near-random sf0.01 embeddings (RECALL.json regenerates these
@@ -117,25 +117,6 @@ def _apply_preset(kind: str, preset: str | None, params: dict) -> dict:
             f"{sorted(ANN_PRESETS[kind])}"
         ) from None
     return {**params, **chosen}
-
-
-def _persist(df: DataFrame, cache_registry: list | None) -> DataFrame:
-    """MEMORY_AND_DISK persist; when the caller passed a ``cache_registry``
-    list, the frame is appended so a long-lived session can ``unpersist()``
-    deterministically instead of relying on ``spark.catalog.clearCache()``
-    (the dedup module idiom, r14 ADVICE).
-
-    Unconditional by design: a size-gated variant (skip below a corpus-row
-    threshold) was built and measured in r15 — with the r15 right-sized
-    scan repartition the persist materialization is CHEAPER than
-    recomputing the signature pass even at sf0.1 (gate 12.61 s vs persist
-    12.03 s over the 8 affected queries), and the gate's row count was
-    pure overhead, so the r14 verdict's size-gate hypothesis (driven by
-    the old 32-partition persist cost) is obsolete."""
-    out = df.persist(StorageLevel.MEMORY_AND_DISK)
-    if cache_registry is not None:
-        cache_registry.append(out)
-    return out
 
 
 def valid_vectors(df: DataFrame, vec_col: str) -> DataFrame:

@@ -2,11 +2,13 @@
 
 The reference's async interval checkpointing to DynamoDB
 (consumer/CheckpointWorker.scala:117-277) collapses into Structured
-Streaming's offset WAL + commit log at ``checkpointLocation``; the
-remaining engine work is *policy*: resolving start position (checkpoint
-always wins — README.md:675-683), graceful shutdown (final restart point =
-last committed batch, the analog of the forced shutdown checkpoint,
-ConsumerWorker.scala:450-499), and lifecycle callbacks replacing
+Streaming's offset WAL + commit log at ``checkpointLocation``. That log
+is also the resume point: a source configured with an initial position
+reads it only when no batch has committed, so the checkpoint always wins
+(README.md:675-683) without an engine-side rule. The remaining engine
+work is *policy*: graceful shutdown (final restart point = last committed
+batch, the analog of the forced shutdown checkpoint,
+ConsumerWorker.scala:450-499) and lifecycle callbacks replacing
 ``ConsumerShutdown``/``ConsumerWorkerFailure`` notifications.
 """
 
@@ -18,8 +20,6 @@ from collections.abc import Callable
 from pyspark.sql import SparkSession
 from pyspark.sql.streaming import StreamingQuery, StreamingQueryListener
 
-from reactive_kinesis_spark.config import ConsumerConfig
-
 
 def has_committed_checkpoint(checkpoint_location: str) -> bool:
     """True iff at least one micro-batch has committed — the 'checkpoint
@@ -28,16 +28,6 @@ def has_committed_checkpoint(checkpoint_location: str) -> bool:
     return os.path.isdir(commits) and any(
         not n.startswith(".") for n in os.listdir(commits)
     )
-
-
-def resolve_starting_position(conf: ConsumerConfig) -> str | None:
-    """C3 precedence: an existing committed checkpoint wins over
-    ``initial_position``; otherwise the configured position applies.
-    Returns None when the checkpoint governs (caller must NOT set a
-    startingPosition option, matching KCL behavior)."""
-    if conf.checkpoint_location and has_committed_checkpoint(conf.checkpoint_location):
-        return None
-    return conf.reader_options()["startingPosition"]
 
 
 def lifecycle_listener(
@@ -76,7 +66,7 @@ def graceful_stop(query: StreamingQuery, timeout_s: float = 60.0) -> None:
     re-reads at most one batch — the documented at-least-once stance,
     README.md:684-686)."""
     query.stop()
-    query.awaitTermination(int(timeout_s))
+    query.awaitTermination(timeout_s)
 
 
 def run_pipeline(

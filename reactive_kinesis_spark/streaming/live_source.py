@@ -44,6 +44,8 @@ the lease checkpoint; ``leaseDir`` is a shared directory every worker
 mounts — see :mod:`.lease`), ``deaggregate`` (true = KCL-style KPL
 deaggregation with sub-sequence numbers), ``transport`` (factory name,
 default ``boto3``) + ``region``/``endpointUrl``/``profile``.
+:meth:`~reactive_kinesis_spark.config.ConsumerConfig.reader_options` builds
+these from a typed consumer config.
 
 Tests inject a fake transport via :func:`register_transport_factory` — the
 same fake-client seam as the producer's ``Boto3Transport``.
@@ -517,17 +519,3 @@ class KinesisLiveDataSource(DataSource):
 def register_live_source(spark) -> None:
     """Register the connector on this session (idempotent)."""
     spark.dataSource.register(KinesisLiveDataSource)
-
-
-def live_reader_options(conf) -> dict[str, str]:
-    """:class:`~reactive_kinesis_spark.config.ConsumerConfig` → this
-    source's option names (initial position, kcl.maxRecords paging)."""
-    opts = {
-        "streamName": conf.stream_name,
-        "startingPosition": conf.initial_position.lower(),
-        "maxRecordsPerBatch": str(conf.max_records),
-    }
-    if conf.at_timestamp is not None:
-        opts["startingTimestamp"] = str(conf.at_timestamp)
-    opts.update(conf.extra_options)
-    return opts

@@ -7,8 +7,8 @@ MetricsGranularity global|stream|shard, MetricsNamespace, MetricsUploadDelay;
 typed knobs producer/KinesisProducerConfig.scala:34-35), and its reliability
 test logs records/sec pit stops while running
 (it/.../SimpleKinesisConsumer.scala:207-217 ``logTiming``). The engine typed
-those knobs in :class:`~reactive_kinesis_spark.config.ProducerConfig`
-(config.py:154-160); this module makes them *do* something for a running
+those knobs in :class:`~reactive_kinesis_spark.config.ProducerConfig`;
+this module makes them *do* something for a running
 pipeline:
 
 * **level** — ``none`` emits nothing; ``summary`` emits the per-batch record
@@ -98,8 +98,8 @@ class MetricsReporter(StreamingQueryListener):
     def from_config(cls, conf, emit: Callable[[dict], None] | None = None):
         """From the typed knobs of a :class:`~reactive_kinesis_spark.config
         .ProducerConfig` (metrics_level / metrics_granularity /
-        metrics_namespace / metrics_upload_delay_millis, config.py:154-160
-        ← reference.conf:204-260)."""
+        metrics_namespace / metrics_upload_delay_millis ←
+        reference.conf:204-260)."""
         return cls(
             level=conf.metrics_level,
             granularity=conf.metrics_granularity,

@@ -4,8 +4,10 @@ The reference starts a KCL worker with one record processor per shard
 (consumer/KinesisConsumer.scala:124-171,207-226); in Spark the source
 connector's partitions ARE the shards and the micro-batch planner replaces
 the per-shard manager. These builders produce streaming DataFrames with the
-canonical EVENT_SCHEMA from any backing source, so every downstream operator
-is source-agnostic.
+canonical EVENT_SCHEMA from files or the rate source; the Kinesis sources
+(``kinesis_live``, fed by ``ConsumerConfig.reader_options()``, and
+``kinesis_replay``) emit the same schema, so every downstream operator is
+source-agnostic.
 
 Rate control: the reference caps fetches at ``maxRecords`` per GetRecords
 (reference.conf:479-482) and relies on blocking dispatch for backpressure
@@ -19,7 +21,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from reactive_kinesis_spark.config import ConsumerConfig
 from reactive_kinesis_spark.schemas import EVENT_SCHEMA
 
 
@@ -58,45 +59,4 @@ def rate_stream_source(
         F.lit(0).cast("long").alias("sub_sequence_number"),
         F.col("value").cast("string").cast("binary").alias("payload"),
         F.col("timestamp").alias("approximate_arrival_timestamp"),
-    )
-
-
-def kinesis_source(spark: SparkSession, conf: ConsumerConfig, fmt: str = "kinesis") -> DataFrame:
-    """Real-Kinesis source passthrough: builds ``spark.readStream.format(
-    'kinesis')`` with the options derived from ConsumerConfig and normalizes
-    the connector's output columns to EVENT_SCHEMA. Requires a Kinesis
-    connector on the classpath (not available in this container — untested
-    wiring, kept thin by design)."""
-    reader = spark.readStream.format(fmt)
-    for k, v in conf.reader_options().items():
-        reader = reader.option(k, v)
-    df = reader.load()
-    cols = set(df.columns)
-    # Connector column-name variants (Spark Kinesis connectors expose
-    # data/partitionKey/sequenceNumber/approximateArrivalTimestamp/shardId).
-    mapping = {
-        "payload": "data" if "data" in cols else "payload",
-        "partition_key": "partitionKey" if "partitionKey" in cols else "partition_key",
-        "sequence_number": "sequenceNumber" if "sequenceNumber" in cols else "sequence_number",
-        "shard_id": "shardId" if "shardId" in cols else "shard_id",
-        "approximate_arrival_timestamp": (
-            "approximateArrivalTimestamp"
-            if "approximateArrivalTimestamp" in cols
-            else "approximate_arrival_timestamp"
-        ),
-    }
-    return df.select(
-        F.lit(conf.stream_name).alias("stream_name"),
-        F.col(mapping["shard_id"]).cast("string").alias("shard_id"),
-        F.col(mapping["partition_key"]).cast("string").alias("partition_key"),
-        F.col(mapping["sequence_number"]).cast("string").alias("sequence_number"),
-        (
-            F.col("subSequenceNumber").cast("long")
-            if "subSequenceNumber" in cols
-            else F.lit(0).cast("long")
-        ).alias("sub_sequence_number"),
-        F.col(mapping["payload"]).cast("binary").alias("payload"),
-        F.col(mapping["approximate_arrival_timestamp"])
-        .cast("timestamp")
-        .alias("approximate_arrival_timestamp"),
     )

@@ -602,6 +602,46 @@ def test_localdir_transport_positions_and_liveness(tmp_path):
     assert drain(last_sequence_number=_seq(9)) == [_seq(i) for i in range(10, 13)]
 
 
+def test_consumer_config_reader_options_drive_kinesis_live(tmp_path):
+    """``ConsumerConfig.reader_options()`` is kinesis_live's option set: an
+    AT_TIMESTAMP config reads only records at or after the timestamp, at
+    most ``max_records`` per shard per batch."""
+    from collections import Counter
+
+    from reactive_kinesis_spark.config import ConsumerConfig
+    from reactive_kinesis_spark.schemas import EVENT_SCHEMA
+    from reactive_kinesis_spark.streaming.consumer_aws import (
+        LocalDirGetRecordsTransport,
+    )
+    from reactive_kinesis_spark.streaming.live_source import KinesisLiveDataSource
+
+    path = str(tmp_path / "stream")
+    shards = [f"shardId-{s:012d}" for s in range(2)]
+    for s, sid in enumerate(shards):
+        LocalDirGetRecordsTransport.append_records(path, sid, _records(f"s{s}", 20))
+    conf = ConsumerConfig(
+        stream_name="s",
+        initial_position="AT_TIMESTAMP",
+        at_timestamp=str(T0 + 7),
+        max_records=5,
+        extra_options={"transport": "localdir", "transportPath": path},
+    )
+    reader = KinesisLiveDataSource(conf.reader_options()).simpleStreamReader(EVENT_SCHEMA)
+    offset, batches = reader.initialOffset(), []
+    for _ in range(10):
+        rows, offset = reader.read(offset)
+        rows = list(rows)
+        if not rows:
+            break
+        batches.append(rows)
+    assert len(batches) == 3  # 13 records per shard at 5 per batch
+    for rows in batches:
+        assert max(Counter(r[1] for r in rows).values()) <= 5
+    got = sorted((r[1], r[3]) for rows in batches for r in rows)
+    assert got == [(sid, _seq(i)) for sid in shards for i in range(7, 20)]
+    assert min(r[6] for rows in batches for r in rows) == _ts(7)
+
+
 def test_resharding_new_shard_picked_up_mid_stream():
     """Shard discovery is per batch (the KCL lease-sync analog): a shard
     created AFTER the query started must appear in the next micro-batch,

@@ -24,8 +24,9 @@ from reactive_kinesis_spark.streaming import (
     with_shard_order,
 )
 from reactive_kinesis_spark.streaming.checkpoint import (
+    graceful_stop,
     has_committed_checkpoint,
-    resolve_starting_position,
+    lifecycle_listener,
     run_pipeline,
 )
 from reactive_kinesis_spark.streaming.deaggregate import pack_records, unpack_records
@@ -97,18 +98,58 @@ def test_no_commit_means_full_replay(spark, tmp_path):
         assert len(seen) == 8
 
 
-def test_starting_position_precedence(tmp_path):
-    conf = ConsumerConfig(
-        stream_name="s1",
-        initial_position="LATEST",
-        checkpoint_location=str(tmp_path / "nope"),
+def test_graceful_stop_sub_second_timeout(spark, tmp_path):
+    src = str(tmp_path / "stream")
+    make_events(spark, 4).write.parquet(src)
+    q = run_pipeline(
+        spark,
+        file_stream_source(spark, src),
+        lambda b, i: None,
+        str(tmp_path / "ckpt"),
+        available_now=False,
     )
-    assert resolve_starting_position(conf) == "latest"  # no checkpoint yet
-    commits = tmp_path / "ck" / "commits"
-    commits.mkdir(parents=True)
-    (commits / "0").write_text("{}")
-    conf.checkpoint_location = str(tmp_path / "ck")
-    assert resolve_starting_position(conf) is None  # checkpoint wins
+    assert q.isActive
+    graceful_stop(q, 0.5)
+    assert not q.isActive
+
+
+def test_lifecycle_listener_reports_start_and_termination(spark, tmp_path):
+    """Start ↔ worker init, clean stop ↔ ConsumerShutdown (no exception),
+    a failing batch ↔ ConsumerWorkerFailure (its exception)."""
+    import time
+
+    started: list[str] = []
+    terminated: dict[str, str | None] = {}
+    listener = lifecycle_listener(
+        on_started=started.append,
+        on_terminated=lambda qid, exc: terminated.__setitem__(qid, exc),
+    )
+    src = str(tmp_path / "stream")
+    make_events(spark, 4).write.parquet(src)
+
+    def boom(batch_df, batch_id):
+        raise RuntimeError("boom-in-batch")
+
+    spark.streams.addListener(listener)
+    try:
+        ok = run_pipeline(
+            spark, file_stream_source(spark, src), lambda b, i: None, str(tmp_path / "c1")
+        )
+        ok.awaitTermination()
+        failing = run_pipeline(
+            spark, file_stream_source(spark, src), boom, str(tmp_path / "c2")
+        )
+        with pytest.raises(Exception, match="boom-in-batch"):
+            failing.awaitTermination()
+        deadline = time.time() + 30  # listener events arrive asynchronously
+        while len(terminated) < 2 and time.time() < deadline:
+            time.sleep(0.1)
+    finally:
+        spark.streams.removeListener(listener)
+    assert sorted(started) == sorted([ok.id, failing.id])
+    assert set(terminated) == {ok.id, failing.id}
+    assert terminated[ok.id] is None
+    assert "boom-in-batch" in terminated[failing.id]
 
 
 # ---------------------------------------------------------------------------
@@ -603,34 +644,90 @@ def test_per_shard_contiguity_soak(spark):
 def test_consumer_config_fallback_resolution():
     cfg = {
         "default-consumer": {
-            "application_name": "app",
+            "initial_position": "AT_TIMESTAMP",
+            "at_timestamp": "1700000000",
             "max_records": 5000,
-            "failure_tolerance_percentage": 0.25,
+            "transport": "localdir",
         },
         "my-consumer": {"stream_name": "s1", "max_records": 100},
     }
     c = ConsumerConfig.from_dict(cfg, "my-consumer")
     assert c.stream_name == "s1"
     assert c.max_records == 100  # named block wins
-    assert c.application_name == "app"  # fallback applies
-    assert c.checkpoint_app_name == "app-s1"  # KinesisConsumer.scala:71-72
-    assert c.reader_options()["maxFetchRecordsPerShard"] == "100"
-    # worker/checkpointer typed surface matches reference.conf defaults
-    # (reference types exactly these; the kcl block is passthrough there too)
-    assert c.graceful_shutdown_hook is True
-    assert c.shutdown_timeout_seconds == 25
-    assert c.checkpoint_notification_delay_millis == 1_000
+    assert c.initial_position == "AT_TIMESTAMP"  # fallback applies
+    assert c.extra_options == {"transport": "localdir"}  # non-field keys pass through
+    # kinesis_live's option names (streaming/live_source.py)
+    assert c.reader_options() == {
+        "streamName": "s1",
+        "startingPosition": "at_timestamp",
+        "startingTimestamp": "1700000000",
+        "maxRecordsPerBatch": "100",
+        "transport": "localdir",
+    }
 
 
-def test_producer_config_extra_options_passthrough():
+def test_producer_config_from_dict_rejects_unknown_keys():
+    """Every field resolves through from_dict (named block over the
+    default block); a key that is not a field raises and names the key —
+    a setting the engine would not act on is never carried silently."""
+    values = {
+        "aggregation_enabled": False,
+        "aggregation_max_count": 1000,
+        "aggregation_max_size": 40_000,
+        "collection_max_count": 123,
+        "collection_max_size": 1_000_000,
+        "max_outstanding_requests": 7,
+        "record_ttl_millis": 12_345,
+        "kinesis_endpoint": "localhost",
+        "kinesis_port": 4567,
+        "region": "us-east-1",
+        "connect_timeout_millis": 1111,
+        "request_timeout_millis": 2222,
+        "max_connections": 9,
+        "verify_certificate": False,
+        "credentials_provider": "profile-a",
+        "metrics_granularity": "stream",
+        "metrics_level": "summary",
+        "metrics_namespace": "MyNS",
+        "metrics_upload_delay_millis": 30_000,
+    }
     cfg = {
-        "default-producer": {"rate_limit_percent": 150},
-        "p": {"stream_name": "s2", "SomeKplKnob": "42"},
+        "default-producer": {**values, "region": "eu-west-1"},
+        "p": {"stream_name": "s2", "region": "us-east-1"},
     }
     p = ProducerConfig.from_dict(cfg, "p")
     assert p.stream_name == "s2"
-    assert p.rate_limit_percent == 150
-    assert p.extra_options["SomeKplKnob"] == "42"
+    for k, v in values.items():
+        assert getattr(p, k) == v, k
+    cfg = {
+        "default-producer": {"rate_limit_percent": 150},
+        "p": {"stream_name": "s2"},
+    }
+    with pytest.raises(TypeError, match="rate_limit_percent"):
+        ProducerConfig.from_dict(cfg, "p")
+    with pytest.raises(ValueError, match="missing stream_name"):
+        ProducerConfig.from_dict({"p": {"region": "us-east-1"}}, "p")
+
+
+def test_every_config_field_is_read_by_the_engine():
+    """Each ConsumerConfig/ProducerConfig field is read as an attribute
+    (``.<name>``) somewhere in the package; a field nothing reads is a
+    setting that silently does nothing."""
+    import dataclasses
+    import pathlib
+    import re
+
+    import reactive_kinesis_spark
+
+    root = pathlib.Path(reactive_kinesis_spark.__file__).parent
+    source = "\n".join(p.read_text() for p in sorted(root.rglob("*.py")))
+    unread = [
+        f"{cls.__name__}.{f.name}"
+        for cls in (ConsumerConfig, ProducerConfig)
+        for f in dataclasses.fields(cls)
+        if not re.search(rf"\.{f.name}\b", source)
+    ]
+    assert unread == []
 
 
 def test_idempotent_sink_replay_produces_no_duplicates(spark, tmp_path):
@@ -729,113 +826,36 @@ def test_rate_stream_source_produces_event_schema(spark, tmp_path):
         q.stop()
 
 
-def test_producer_config_full_kpl_knob_round_trip():
-    """Full typed KPL knob surface (U2): every setting of the reference's
-    KinesisProducerConfig (producer/KinesisProducerConfig.scala:27-60) has a
-    typed field, a KPL-named emission (toAwsConfig analog), and survives the
-    round trip from_dict → kpl_config → from_kpl_config — the engine's form
-    of ProducerConfSpec.scala:223-392."""
-    from reactive_kinesis_spark.config import _KPL_FIELD_MAP
-
-    block = {
-        "stream_name": "s-full",
-        "aggregation_enabled": False,
-        "aggregation_max_count": 1000,
-        "aggregation_max_size": 40_000,
-        "collection_max_count": 123,
-        "collection_max_size": 1_000_000,
-        "max_outstanding_requests": 7,
-        "record_ttl_millis": 12_345,
-        "rate_limit_percent": 90,
-        "kinesis_endpoint": "localhost",
-        "kinesis_port": 4567,
-        "region": "us-east-1",
-        "connect_timeout_millis": 1111,
-        "request_timeout_millis": 2222,
-        "min_connections": 2,
-        "max_connections": 9,
-        "verify_certificate": False,
-        "fail_if_throttled": True,
-        "record_max_buffered_time_millis": 250,
-        "credentials_provider": "profile-a",
-        "metrics_credentials_provider": "profile-b",
-        "credentials_refresh_delay_millis": 4000,
-        "cloudwatch_endpoint": "cw.local",
-        "cloudwatch_port": 4568,
-        "metrics_granularity": "stream",
-        "metrics_level": "summary",
-        "metrics_namespace": "MyNS",
-        "metrics_upload_delay_millis": 30_000,
-        "additional_metric_dimensions": [
-            {"key": "env", "value": "test", "granularity": "stream"}
-        ],
-        "log_level": "warning",
-        "enable_core_dumps": True,
-        "native_executable": "/opt/kpl",
-        "temp_directory": "/tmp/kpl",
-        "threading_model": "POOLED",
-        "thread_pool_size": 16,
-    }
-    conf = ProducerConfig.from_dict({"default-producer": {}, "p1": block}, "p1")
-    # every typed field got its value (none fell into extra_options)
-    for k, v in block.items():
-        assert getattr(conf, k) == v, k
-    assert conf.extra_options == {}
-
-    kpl = conf.kpl_config()
-    # every KPL knob of the reference surface is emitted under its KPL name
-    assert set(kpl) == set(_KPL_FIELD_MAP.values())
-    assert kpl["AggregationMaxCount"] == 1000
-    assert kpl["ThreadingModel"] == "POOLED"
-
-    back = ProducerConfig.from_kpl_config("s-full", kpl)
-    for field_name in _KPL_FIELD_MAP:
-        assert getattr(back, field_name) == getattr(conf, field_name), field_name
-
-
 def test_producer_config_defaults_match_kpl_defaults():
     """Defaults mirror the public KPL defaults (reference.conf:57-395)."""
     conf = ProducerConfig(stream_name="s")
-    kpl = conf.kpl_config()
-    assert kpl["AggregationEnabled"] is True
-    assert kpl["AggregationMaxCount"] == 4_294_967_295
-    assert kpl["AggregationMaxSize"] == 51_200
-    assert kpl["CollectionMaxCount"] == 500
-    assert kpl["CollectionMaxSize"] == 5_242_880
-    assert kpl["ConnectTimeout"] == 6_000
-    assert kpl["RequestTimeout"] == 6_000
-    assert kpl["CloudwatchPort"] == 443
-    assert kpl["KinesisPort"] == 443
-    assert kpl["MinConnections"] == 1
-    assert kpl["MaxConnections"] == 24
-    assert kpl["RateLimit"] == 150
-    assert kpl["RecordMaxBufferedTime"] == 100
-    assert kpl["RecordTtl"] == 30_000
-    assert kpl["MetricsGranularity"] == "shard"
-    assert kpl["MetricsLevel"] == "detailed"
-    assert kpl["MetricsNamespace"] == "KinesisProducerLibrary"
-    assert kpl["MetricsUploadDelay"] == 60_000
-    assert kpl["LogLevel"] == "info"
-    assert kpl["VerifyCertificate"] is True
-    assert kpl["FailIfThrottled"] is False
-    assert kpl["EnableCoreDumps"] is False
-    assert kpl["ThreadingModel"] == "PER_REQUEST"
-    assert kpl["ThreadPoolSize"] == 0
-    # unset Optionals are absent, exactly like the reference's Option folds
-    for absent in ("KinesisEndpoint", "CloudwatchEndpoint", "Region",
-                   "NativeExecutable", "TempDirectory", "CredentialsProvider",
-                   "MetricsCredentialsProvider"):
-        assert absent not in kpl
+    assert conf.aggregation_enabled is True
+    assert conf.aggregation_max_count == 4_294_967_295
+    assert conf.aggregation_max_size == 51_200
+    assert conf.collection_max_count == 500
+    assert conf.collection_max_size == 5_242_880
+    assert conf.connect_timeout_millis == 6_000
+    assert conf.request_timeout_millis == 6_000
+    assert conf.kinesis_port == 443
+    assert conf.max_connections == 24
+    assert conf.record_ttl_millis == 30_000
+    assert conf.metrics_granularity == "shard"
+    assert conf.metrics_level == "detailed"
+    assert conf.metrics_namespace == "KinesisProducerLibrary"
+    assert conf.metrics_upload_delay_millis == 60_000
+    assert conf.verify_certificate is True
+    # unset optionals: public regional endpoint, default credential chain,
+    # strict sequential send
+    assert conf.kinesis_endpoint is None
+    assert conf.region is None
+    assert conf.credentials_provider is None
+    assert conf.max_outstanding_requests is None
 
 
 def test_producer_config_rejects_invalid_enums_and_caps():
-    with pytest.raises(ValueError, match="threading_model"):
-        ProducerConfig(stream_name="s", threading_model="FIBERS")
     with pytest.raises(ValueError, match="metrics_level"):
         ProducerConfig(stream_name="s", metrics_level="verbose")
     with pytest.raises(ValueError, match="metrics_granularity"):
         ProducerConfig(stream_name="s", metrics_granularity="galaxy")
-    with pytest.raises(ValueError, match="log_level"):
-        ProducerConfig(stream_name="s", log_level="loud")
     with pytest.raises(ValueError, match="collection_max_count"):
         ProducerConfig(stream_name="s", collection_max_count=501)
